@@ -13,6 +13,10 @@ events to sliding windows) is threaded through every scan, join and
 aggregation as an implicit key.  That turns "evaluate this query once per
 window" (the reference's per-window loop, historical_executor.rs:424-460)
 into ONE shuffle-efficient distributed plan over all windows at once.
+Given as a frame of the partition values evaluated (e.g. window ids),
+it also replicates static quads into every partition and gives an
+aggregate without GROUP BY its empty-group row (SPARQL's implicit group)
+in partitions without solutions, as a per-window run does.
 """
 
 from __future__ import annotations
@@ -86,7 +90,7 @@ class _StarFrame:
 @dataclass
 class SparqlCompiler:
     quads: DataFrame
-    partition_cols: list[str] = field(default_factory=list)
+    partition_cols: list[str] | DataFrame = field(default_factory=list)
     registry: dict = field(default_factory=lambda: dict(FUNCTION_REGISTRY))
     static_quads: DataFrame | None = None  # baseline/background triples (broadcast side)
     # +/* property-path closures iterate to FIXPOINT by default (the
@@ -118,6 +122,13 @@ class SparqlCompiler:
     # smallest intermediate drives the join chain — the missing
     # "selectivity notion" the heuristic alone cannot have.
     predicate_stats: dict = field(default_factory=dict)
+
+    def __post_init__(self):
+        self.partitions: DataFrame | None = None
+        if isinstance(self.partition_cols, DataFrame):
+            self.partitions, self.partition_cols = self.partition_cols, self.partition_cols.columns
+            if self.static_quads is not None:  # in every partition; tiny side
+                self.static_quads = self.static_quads.crossJoin(F.broadcast(self.partitions))
 
     # ------------------------------------------------------------ entry
     def compile(self, q) -> DataFrame:
@@ -555,15 +566,10 @@ class SparqlCompiler:
             # static/baseline triples are visible alongside window quads
             # (reference inserts them into the evaluation store,
             # live_stream_processing.rs:509-530); static side is tiny.
-            static = self.static_quads
-            for pc in self.partition_cols:
-                if pc not in static.columns:
-                    static = None
-                    break
-            if static is not None:
-                src = src.unionByName(static, allowMissingColumns=False)
-            else:
-                src = self.quads
+            missing = [pc for pc in self.partition_cols if pc not in self.static_quads.columns]
+            if missing:
+                raise ValueError(f"static_quads lack partition column(s) {missing}")
+            src = src.unionByName(self.static_quads)
         conds: list[Column] = []
         proj: dict[str, str] = {}  # var name -> source column
         for pos, term in (("subject", tp.s), ("predicate", tp.p), ("object", tp.o)):
@@ -739,7 +745,12 @@ class SparqlCompiler:
         aggs = [compile_aggregate(call, self.registry).alias(name) for call, name in agg_calls.items()]
         if not aggs:
             aggs = [F.count(F.lit(1)).alias("__agg_dummy")]
-        df = df.groupBy(*all_group).agg(*aggs) if all_group else df.agg(*aggs)
+        grouped = df.groupBy(*all_group).agg(*aggs) if all_group else df.agg(*aggs)
+        if self.partitions is not None and not group_cols:
+            missing = self.partitions.join(grouped.select(*all_group), all_group, "left_anti")
+            # df.limit(0).agg: the implicit group's row over no solutions
+            grouped = grouped.unionByName(missing.crossJoin(df.limit(0).agg(*aggs)))
+        df = grouped
 
         if having is not None:
             df = df.filter(compile_expr(having, "bool", self.registry, agg_map=agg_calls))
@@ -765,7 +776,7 @@ class SparqlCompiler:
 def compile_sparql(
     q: SelectQuery,
     quads: DataFrame,
-    partition_cols: list[str] | None = None,
+    partition_cols: list[str] | DataFrame | None = None,
     registry: dict | None = None,
     static_quads: DataFrame | None = None,
     property_tables: dict | None = None,
@@ -775,7 +786,7 @@ def compile_sparql(
 ) -> DataFrame:
     return SparqlCompiler(
         quads,
-        partition_cols or [],
+        partition_cols if partition_cols is not None else [],
         registry if registry is not None else dict(FUNCTION_REGISTRY),
         static_quads,
         property_tables=property_tables or {},

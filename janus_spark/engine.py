@@ -184,7 +184,10 @@ class JanusEngine:
         hist = self.run_historical_window(parsed, w, quads, now)
         ord_col = "window_end" if "window_end" in hist.columns else None
         bl = build_baseline(hist, parsed.baseline_mode or "LAST", window_ord_col=ord_col)
-        static = baseline_to_quads(bl)
+        # eager on purpose: the reference computes the baseline once at
+        # start (janus_api.rs:352-407); a lazy frame would re-aggregate the
+        # historical window from the log at every live evaluation
+        static = baseline_to_quads(bl).localCheckpoint()
         rq.status = RUNNING
         return static
 
@@ -266,21 +269,3 @@ class JanusEngine:
             rq.status = RUNNING
             return "native", native_window_agg_stream(rq.parsed, stream_df, watermark=watermark)
         return "foreachbatch", self.start_live(query_id, buffer_path, sink=sink)
-
-    def run_live_batch(
-        self,
-        query_id: str,
-        window_quads: DataFrame,
-        static_quads: DataFrame | None = None,
-    ) -> DataFrame:
-        """Evaluate the live query over one window's content (the unit the
-        streaming runtime calls per window close)."""
-        rq = self.registry[query_id]
-        from janus_spark.compiler.compile import compile_sparql
-
-        sq = rq.parsed.live_query()
-        df = compile_sparql(
-            sq, window_quads, static_quads=static_quads,
-            predicate_stats=self.predicate_stats,
-        )
-        return tag_results(df, query_id, "live")

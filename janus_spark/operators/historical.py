@@ -16,8 +16,9 @@ a broadcast range-join against the tiny window-bounds table, and the
 compiled plan runs ONCE over all windows with ``__window_id`` threaded as
 an implicit key (see compiler.compile partition_cols).  At 100 TB this is
 one shuffle instead of N sequential jobs; windows with zero matching
-events simply produce no rows, matching the reference (empty windows emit
-empty batches).
+events produce no rows, matching the reference (empty windows emit empty
+batches), except that an aggregate without GROUP BY yields one row per
+hop, as the reference's per-hop evaluation does.
 """
 
 from __future__ import annotations
@@ -178,6 +179,13 @@ def _run_sliding_panes(
     seq = F.when(lo <= hi, F.sequence(lo, hi)).otherwise(F.array().cast("array<long>"))
     win = F.explode(seq).alias(WINDOW_ID)
     exploded = partials.select(*group_names, win, *p_names)
+    if not group_names:
+        # SPARQL's implicit group: every hop has a row, so pad each window
+        # with an empty partial (COUNT 0; SUM/MIN/MAX/AVG unbound)
+        counts = {f"__p{i}" for i, (_, kind, _) in enumerate(items) if kind in ("COUNT", "COUNT_STAR")}
+        pad = [F.lit(0 if p in counts else None).alias(p) for p in p_names]
+        windows = quads.sparkSession.range(k_max + 1).select(F.col("id").alias(WINDOW_ID), *pad)
+        exploded = exploded.unionByName(windows)
     final = exploded.groupBy(*group_names, WINDOW_ID).agg(*final_cols)
     # key projections may alias the grouping var ((?u AS ?x)): the frame
     # carries the var name, the output contract carries the alias
@@ -229,11 +237,18 @@ def sliding_window_bounds(now: int, offset_ms: int, range_ms: int, step_ms: int)
     return out
 
 
+def window_table(spark: SparkSession, bounds: list[tuple[int, int, int]]) -> DataFrame:
+    """A few windows' ``(id, start, end)`` table (a live micro-batch's hops)
+    as inline VALUES: a local relation, broadcast without a Spark job.  Its
+    parse time grows with the rows, so 10^5-hop geometries use createDataFrame."""
+    rows = ", ".join(f"({int(w)}L, {int(s)}L, {int(e)}L)" for w, s, e in bounds)
+    return spark.sql(f"SELECT * FROM VALUES {rows} AS t({WINDOW_ID}, {WINDOW_START}, {WINDOW_END})")
+
+
 def assign_sliding_windows(quads: DataFrame, bounds: list[tuple[int, int, int]]) -> DataFrame:
     """Tag each quad with every window it belongs to via a broadcast
     range-join (window table is tiny — tens of rows)."""
-    spark = quads.sparkSession
-    bdf = spark.createDataFrame(bounds, schema=f"{WINDOW_ID} long, {WINDOW_START} long, {WINDOW_END} long")
+    bdf = window_table(quads.sparkSession, bounds)
     lo = min(b[1] for b in bounds)
     hi = max(b[2] for b in bounds)
     pruned = quads.where(F.col("ts").between(F.lit(lo), F.lit(hi)))
@@ -244,25 +259,14 @@ def assign_sliding_windows(quads: DataFrame, bounds: list[tuple[int, int, int]])
     )
 
 
-def assign_sliding_windows_regular(
-    quads: DataFrame, now: int, offset_ms: int, range_ms: int, step_ms: int
-) -> DataFrame:
-    """Arithmetic window-id assignment for regular hops — NO join at all.
-
-    A quad at ts belongs to window k iff
-    ``base + k*step <= ts <= base + k*step + range`` with
-    ``base = now - offset``; the valid k interval is computed per row and
-    exploded map-side.  At 100 TB this replaces a broadcast nested-loop
-    range join with a pure narrow transformation.
-    """
-    return tag_window_ids(quads, F.col("ts"), now, offset_ms, range_ms, step_ms)
-
-
 def tag_window_ids(
     df: DataFrame, ts_col, now: int, offset_ms: int, range_ms: int, step_ms: int
 ) -> DataFrame:
     """Explode rows into the sliding windows containing ``ts_col`` —
-    map-side arithmetic, no join (see assign_sliding_windows_regular)."""
+    map-side arithmetic, no join: a row at ts is in window k iff
+    ``base + k*step <= ts <= base + k*step + range`` (``base = now -
+    offset``).  At 100 TB this replaces assign_sliding_windows' broadcast
+    nested-loop range join with a pure narrow transformation."""
     base = now - offset_ms
     k_max = offset_ms // step_ms
     pruned = df.where(ts_col.between(F.lit(base), F.lit(now)))
@@ -308,6 +312,9 @@ def run_historical_sliding(
     True/False force/disable it (parity tests use both).
     """
     bounds = sliding_window_bounds(now, offset_ms, range_ms, step_ms)
+    bdf = quads.sparkSession.createDataFrame(
+        bounds, schema=f"{WINDOW_ID} long, {WINDOW_START} long, {WINDOW_END} long"
+    )
     spec = sliding_pane_spec(query) if use_panes is not False else None
     if (
         spec is not None
@@ -319,14 +326,10 @@ def run_historical_sliding(
         result = _run_sliding_panes(
             query, quads, now, offset_ms, range_ms, step_ms, registry, spec
         )
-        spark = quads.sparkSession
-        bdf = spark.createDataFrame(
-            bounds, schema=f"{WINDOW_ID} long, {WINDOW_START} long, {WINDOW_END} long"
-        )
         return result.join(F.broadcast(bdf), on=WINDOW_ID, how="inner").drop(WINDOW_ID)
     if use_panes:
         raise ValueError("query is not pane-decomposable (use_panes=True)")
-    tagged = assign_sliding_windows_regular(quads, now, offset_ms, range_ms, step_ms)
+    tagged = tag_window_ids(quads, F.col("ts"), now, offset_ms, range_ms, step_ms)
     pts = None
     if property_tables:
         from janus_spark.sources.melt import PropertyTable
@@ -351,14 +354,12 @@ def run_historical_sliding(
         query,
         tagged,
         property_tables=pts,
-        partition_cols=[WINDOW_ID],
+        partition_cols=bdf.select(WINDOW_ID),
         registry=registry,
         static_quads=static_quads,
         path_max_hops=path_max_hops,
         predicate_stats=predicate_stats,
     )
-    spark = quads.sparkSession
-    bdf = spark.createDataFrame(bounds, schema=f"{WINDOW_ID} long, {WINDOW_START} long, {WINDOW_END} long")
     return result.join(F.broadcast(bdf), on=WINDOW_ID, how="inner").drop(WINDOW_ID)
 
 

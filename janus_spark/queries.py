@@ -2815,8 +2815,8 @@ def _live_delta_gate(spark: SparkSession, operator: str) -> DataFrame:
 def q_live_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed RStream delivery under the EXACT gate: the sliding-
     window fixture flows through a real Structured Streaming run with a
-    ParquetSink — each fired window's FULL result is written parquet by
-    the executors and only manifests reach the driver; the read-back of
+    ParquetSink — each micro-batch's FULL result is written parquet by
+    the executors and only per-window manifests reach the driver; the read-back of
     every manifest must hash-match the all-windows SQL reconstruction
     (streaming/live.py::ParquetSink — the at-scale alternative to the
     reference's rows-over-channel contract, src/http/server.rs:473).

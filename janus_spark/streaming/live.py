@@ -14,27 +14,40 @@ Reference behavior (rsp-rs usage in src/stream/live_stream_processing.rs):
 Spark-first design: the runtime rides Structured Streaming's
 ``foreachBatch``.  Each micro-batch appends to a time-retention event
 buffer (bounded by the max window range — the same state rsp-rs keeps in
-memory, but spillable and distributed); newly closed windows are computed
-from the max event time and each fires one batch evaluation of the
-compiled plan over the merged window slice.  Late events older than the
-watermark slack are dropped (the reference has NO late-data story at all —
-its MQTT path overwrites event time with arrival time; we document the
-divergence and keep a configurable allowed lateness instead).
+memory, but spillable and distributed).  All hops it closes (from the
+max event time) run as ONE window-id plan, like historical sliding
+windows: one compile, one collect, rows split per window on the driver,
+so its Spark jobs do not grow with the windows fired.  Late events older
+than the watermark slack are dropped (the reference has NO late-data
+story at all — its MQTT path overwrites event time with arrival time; we
+document the divergence and keep a configurable allowed lateness instead).
 """
 
 from __future__ import annotations
 
-import re
+import dataclasses
 import shutil
 import time
-from dataclasses import dataclass, field
+from collections import Counter, defaultdict
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from janus_spark.compiler.compile import compile_sparql
+from janus_spark.model import QUAD_COLUMNS
+from janus_spark.operators.historical import WINDOW_ID, assign_sliding_windows, window_table
 from janus_spark.parsing.janusql import JanusQuery, WindowDef
+
+# hops of one window spec fired per on_batch/close call: the most recent
+# ones; older closed hops are skipped (bounds a late-starting backfill)
+MAX_WINDOWS_PER_BATCH = 100
+# rows of one fired window emitted to a driver-side sink (ParquetSink: no
+# bound); a per-window LIMIT in the plan: a collect holds this many rows at
+# most per distinct window end
+COLLECT_LIMIT = 100_000
 
 
 class ListSink:
@@ -56,10 +69,12 @@ class ListSink:
 
 class ParquetSink:
     """Distributed RStream result delivery — the at-scale escape hatch
-    for ``collect_limit``: each fired window's FULL result is written as
-    parquet by the executors (one directory per fire), and only a
-    manifest row (window bounds, path, row count) crosses to the driver
-    channel.  The reference's results-to-channel contract
+    for ``COLLECT_LIMIT``: the executors write the FULL result of a
+    micro-batch's fired windows once, partitioned by window id, and only
+    a manifest row per fired window (window bounds, path, row count)
+    crosses to the driver channel.  Every manifest path is a readable
+    parquet directory; an empty window's holds one empty file.
+    The reference's results-to-channel contract
     (src/http/server.rs:473-545) stays intact — consumers follow the
     manifest to the data instead of receiving the rows inline.
 
@@ -76,29 +91,23 @@ class ParquetSink:
         self.root.mkdir(parents=True, exist_ok=True)
         self.manifests: list[dict] = []
 
-    def write(self, window_name: str, window_start: int, window_end: int,
-              result: DataFrame) -> None:
-        safe = re.sub(r"[^A-Za-z0-9_.-]", "_", window_name)
-        path = str(self.root / safe / f"w_{window_start}_{window_end}")
-        result.write.mode("overwrite").parquet(path)
-        # count from the written footers (metadata-only scan), not a
-        # second run of the query plan
-        n = result.sparkSession.read.parquet(path).count()
-        self.manifests.append(
-            {
-                "window": window_name,
-                "window_start": window_start,
-                "window_end": window_end,
-                "path": path,
-                "n_rows": n,
-            }
-        )
-
-
-@dataclass
-class _WindowState:
-    spec: WindowDef
-    last_fired_end: int = -1
+    def write(self, fires: list[tuple[str, int, int, int]], result: DataFrame) -> None:
+        """``fires``: (window name, start, end, window id) in emission
+        order; ``result`` carries the window id column."""
+        # a call's hop ends all lie past every earlier call's: a unique key
+        path = self.root / f"upto_{max(e for _, _, e, _ in fires)}"
+        result.write.mode("overwrite").partitionBy(WINDOW_ID).parquet(str(path))
+        for name, s, e, wid in fires:
+            part = path / f"{WINDOW_ID}={wid}"
+            if not part.exists():
+                # the write leaves no directory for a window without rows:
+                # give it one empty file with the result's schema
+                part.mkdir(parents=True)
+                schema = to_arrow_schema(result.drop(WINDOW_ID).schema)
+                pq.write_table(schema.empty_table(), part / "part-00000.parquet")
+            # row count from the written footers, not a second run of the plan
+            n = sum(pq.read_metadata(f).num_rows for f in part.glob("*.parquet"))
+            self.manifests.append(dict(window=name, window_start=s, window_end=e, path=str(part), n_rows=n))
 
 
 class LiveQueryRunner:
@@ -116,8 +125,6 @@ class LiveQueryRunner:
         static_quads: DataFrame | None = None,
         sink=None,
         registry: dict | None = None,
-        max_windows_per_batch: int = 100,
-        collect_limit: int = 100_000,
     ):
         self.spark = spark
         self.parsed = parsed
@@ -126,21 +133,24 @@ class LiveQueryRunner:
         self.static_quads = static_quads
         self.sink = sink if sink is not None else ListSink()
         self.registry = registry
-        self.max_windows_per_batch = max_windows_per_batch
-        self.collect_limit = collect_limit
-        self.windows = [_WindowState(w) for w in parsed.live_windows]
+        self.windows: list[WindowDef] = parsed.live_windows
         if not self.windows:
             raise ValueError("query has no live windows")
-        self.max_range = max(w.spec.range_ms for w in self.windows)
+        self.max_range = max(w.range_ms for w in self.windows)
+        self._last_fired_end = {w.name: -1 for w in self.windows}
         self.max_ts: int = -1
-        self._live_query = parsed.live_query()
+        self._distributed = getattr(self.sink, "wants_dataframe", False)
+        q = parsed.live_query()
+        # COLLECT_LIMIT as a LIMIT: the compiler ranks each window's rows
+        cap = COLLECT_LIMIT if q.limit is None else min(q.limit, COLLECT_LIMIT)
+        self._live_query = q if self._distributed else dataclasses.replace(q, limit=cap)
         self._chunks: dict[str, int] = {}  # subdir name -> max ts (for pruning)
         self._chunk_no = 0
         # R2S operator: RStream re-emits the full result each close (the
         # only mode the reference implements); IStream emits only rows new
         # since the previous close, DStream only rows that disappeared
         self.operator = (parsed.operator or "RStream").upper()
-        if getattr(self.sink, "wants_dataframe", False) and self.operator != "RSTREAM":
+        if self._distributed and self.operator != "RSTREAM":
             raise ValueError(
                 "distributed (DataFrame) sinks support RStream only: "
                 f"{self.operator} maintains driver-side multiset state over "
@@ -187,13 +197,11 @@ class LiveQueryRunner:
     def on_batch(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
         t0 = time.perf_counter()
         self.metrics["n_batches"] += 1
-        m = self._append_buffer(batch_df.select("ts", "subject", "predicate", "object", "graph"))
-        if m is None:
-            self.metrics["last_batch_wall_ms"] = round((time.perf_counter() - t0) * 1000, 1)
-            return
-        self.max_ts = max(self.max_ts, m)
-        self._fire_closed_windows(self.max_ts)
-        self._prune_buffer()
+        m = self._append_buffer(batch_df.select(*QUAD_COLUMNS))
+        if m is not None:
+            self.max_ts = max(self.max_ts, m)
+            self._fire_closed_windows(self.max_ts)
+            self._prune_buffer()
         self.metrics["last_batch_wall_ms"] = round((time.perf_counter() - t0) * 1000, 1)
 
     def close(self, final_ts: int | None = None) -> None:
@@ -204,79 +212,70 @@ class LiveQueryRunner:
         self._fire_closed_windows(t)
 
     def _fire_closed_windows(self, upto_ts: int) -> None:
-        buffer = None
-        for ws in self.windows:
-            st, rng = ws.spec.step_ms, ws.spec.range_ms
-            # window hops [k*st, k*st + rng); closed when end <= upto_ts
-            last_end = ws.last_fired_end
-            fired = 0
-            k_end = (upto_ts - rng) // st  # largest k with k*st+rng <= upto_ts
-            k_start_candidates = []
-            k = k_end
-            while k >= 0 and k * st + rng > last_end and fired < self.max_windows_per_batch:
-                k_start_candidates.append(k)
-                k -= 1
-                fired += 1
-            for k in reversed(k_start_candidates):
-                s, e = k * st, k * st + rng
-                if buffer is None:
-                    buffer = self._buffer_df()
-                self._evaluate_window(ws, buffer, s, e)
-                ws.last_fired_end = e
+        # closed (end <= upto_ts), not yet fired hops [k*st, k*st + rng) in
+        # emission order: window specs in query order, k ascending
+        fires: list[tuple[str, int, int]] = []
+        for w in self.windows:
+            st, rng = w.step_ms, w.range_ms
+            k_hi = (upto_ts - rng) // st
+            k_lo = max(0, (self._last_fired_end[w.name] - rng) // st + 1, k_hi - MAX_WINDOWS_PER_BATCH + 1)
+            fires += [(w.name, k * st, k * st + rng) for k in range(k_lo, k_hi + 1)]
+            if k_lo <= k_hi:
+                self._last_fired_end[w.name] = k_hi * st + rng
+        if fires:
+            self._evaluate(fires)
 
-    def _evaluate_window(self, ws: _WindowState, buffer: DataFrame, s: int, e: int) -> None:
-        self.metrics["windows_fired"] += 1
-        self.metrics["last_fire_window_end"] = e
-        # W4 cross-window merge: union every live window's active slice at
-        # time e (the firing window's own slice is [s, e))
-        slices = [buffer.where((F.col("ts") >= s) & (F.col("ts") < e))]
-        for other in self.windows:
-            if other is ws:
-                continue
-            o_rng = other.spec.range_ms
-            slices.append(buffer.where((F.col("ts") >= e - o_rng) & (F.col("ts") < e)))
-        content = slices[0]
-        for sl in slices[1:]:
-            content = content.unionByName(sl)
-        # window containers have SET semantics (rsp-rs QuadContainer is a
-        # HashSet<Quad>): identical quads collapse, incl. feed duplicates
-        content = content.dropDuplicates(["ts", "subject", "predicate", "object", "graph"])
+    def _evaluate(self, fires: list[tuple[str, int, int]]) -> None:
+        """Evaluate every fired hop with one plan and one result action."""
+        self.metrics["windows_fired"] += len(fires)
+        self.metrics["last_fire_window_end"] = fires[-1][2]
+        # W4 cross-window merge: a fire ending at e sees every live
+        # window's slice [e - range, e); their union is [e - max_range, e),
+        # so hops ending together share content and one window id.  Bounds
+        # are inclusive and event time is integer ms: the last ts is e - 1.
+        ends = sorted({e for _, _, e in fires})
+        wid = {e: i for i, e in enumerate(ends)}
+        bounds = [(i, e - self.max_range, e - 1) for i, e in enumerate(ends)]
+        ids = window_table(self.spark, bounds).select(WINDOW_ID)
+        content = (
+            assign_sliding_windows(self._buffer_df(), bounds)
+            .select(*QUAD_COLUMNS, WINDOW_ID)
+            # window containers have SET semantics (rsp-rs QuadContainer is
+            # a HashSet<Quad>): identical quads collapse, incl. feed duplicates
+            .dropDuplicates([*QUAD_COLUMNS, WINDOW_ID])
+        )
         result = compile_sparql(
             self._live_query,
             content,
+            partition_cols=ids,
             registry=self.registry,
             static_quads=self.static_quads,
         )
-        if getattr(self.sink, "wants_dataframe", False):
-            # distributed delivery: executors write the full result; only
-            # the manifest reaches the driver (no collect_limit bound)
-            self.sink.write(ws.spec.name, s, e, result)
+        if self._distributed:
+            # executors write the full results; only manifests reach the driver
+            self.sink.write([(name, s, e, wid[e]) for name, s, e in fires], result)
             return
-        rows = result.limit(self.collect_limit).collect()
+        cols = [c for c in result.columns if c != WINDOW_ID]
+        rows: dict[int, list] = defaultdict(list)
+        for i, row in result.select(WINDOW_ID, F.struct(*cols)).collect():
+            rows[i].append(row)
+        for name, s, e in fires:
+            self._emit(name, s, e, rows[wid[e]])
+
+    def _emit(self, name: str, s: int, e: int, rows: list) -> None:
         if self.operator in ("ISTREAM", "DSTREAM"):
             # bag (multiset) semantics: a solution's multiplicity delta
             # determines how many copies are inserted/deleted
-            from collections import Counter
-
-            prev = self._prev_rows.get(ws.spec.name, [])
-            cur_cnt, prev_cnt = Counter(map(tuple, rows)), Counter(map(tuple, prev))
-            emitted = []
-            if self.operator == "ISTREAM":
-                budget = cur_cnt - prev_cnt
-                source = rows
-            else:
-                budget = prev_cnt - cur_cnt
-                source = prev
-            remaining = dict(budget)
-            for r in source:
-                t = tuple(r)
-                if remaining.get(t, 0) > 0:
-                    remaining[t] -= 1
-                    emitted.append(r)
-            self._prev_rows[ws.spec.name] = rows
-            self.sink(ws.spec.name, s, e, emitted)
-        else:
-            self.sink(ws.spec.name, s, e, rows)
+            prev = self._prev_rows.get(name, [])
+            self._prev_rows[name] = rows
+            new, old = (rows, prev) if self.operator == "ISTREAM" else (prev, rows)
+            budget = Counter(map(tuple, new)) - Counter(map(tuple, old))
+            rows = []
+            for r in new:
+                if budget[tuple(r)] > 0:
+                    budget[tuple(r)] -= 1
+                    rows.append(r)
+        self.sink(name, s, e, rows)
 
     # -------------------------------------------------- structured stream
     def attach(self, stream_df: DataFrame, trigger_seconds: float | None = None, once: bool = False):

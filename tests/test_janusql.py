@@ -163,7 +163,7 @@ def test_baseline_non_numeric_keeps_last(spark):
     assert rows[(f"{EX}s1", "state")] == "high"
 
 
-def test_hybrid_baseline_flow(spark):
+def test_hybrid_baseline_flow(spark, tmp_path):
     """End-to-end W8: historical window -> baseline quads -> live join."""
     quads = melt_sensor_fixture(spark, 30)  # ts 100..3000
     eng = JanusEngine(spark, quads)
@@ -172,11 +172,14 @@ def test_hybrid_baseline_flow(spark):
     srows = static.collect()
     assert all(r["predicate"] == "https://janus.rs/baseline#mean" for r in srows)
     assert len(srows) == 5  # one baseline triple per sensor
-    # live batch: join live temps against baseline means
-    live = eng.run_live_batch(qid, quads.limit(50), static_quads=static)
-    lrows = live.collect()
+    # live side: join live temps against baseline means
+    runner = eng.start_live(qid, str(tmp_path / "buf"))
+    runner.on_batch(quads)
+    runner.close()
+    means = {r["subject"]: r["object"] for r in srows}
+    lrows = [r for b in runner.sink.batches for r in b["rows"]]
     assert len(lrows) > 0
-    assert all(r["source"] == "live" for r in lrows)
+    assert all(r["mean"] == means[r["sensor"]] for r in lrows)
 
 
 def test_sliding_window_limit_is_per_window(spark):
@@ -225,3 +228,35 @@ def test_historical_query_keeps_order_by_on_aggregate_alias():
     (e1, asc1), (e2, asc2) = sq.order_by
     assert not asc1 and asc2
     assert sq.limit == 3
+
+
+def test_sliding_window_joins_static_triple(spark):
+    """Static (baseline) triples are visible in every sliding hop: the
+    window-id plan replicates them per window instead of dropping them."""
+    from pyspark.sql import functions as F
+
+    from janus_spark.compiler import compile_sparql, parse_sparql
+    from janus_spark.operators.historical import run_historical_sliding
+
+    quads = melt_sensor_fixture(spark, 40)  # ts 100..4000
+    static = spark.createDataFrame(
+        [(0, f"{EX}sensor1", f"{EX}label", "one", "")],
+        ["ts", "subject", "predicate", "object", "graph"],
+    )
+    q = parse_sparql(f"SELECT ?s ?t ?l WHERE {{ ?s <{EX}temperature> ?t . ?s <{EX}label> ?l . }}")
+    got = run_historical_sliding(q, quads, 4000, 3000, 1000, 1000, static_quads=static)
+    temps = run_historical_sliding(
+        parse_sparql(f"SELECT ?s ?t WHERE {{ ?s <{EX}temperature> ?t . }}"), quads, 4000, 3000, 1000, 1000
+    )
+    want = sorted(
+        (r["window_start"], r["t"]) for r in temps.collect() if r["s"] == f"{EX}sensor1"
+    )
+    rows = got.collect()
+    assert want and sorted((r["window_start"], r["t"]) for r in rows) == want
+    assert all(r["l"] == "one" for r in rows)
+    # untagged static quads under partition columns are an error, not a drop
+    with pytest.raises(ValueError, match="partition column"):
+        compile_sparql(
+            q, quads.withColumn("__window_id", F.lit(0)),
+            partition_cols=["__window_id"], static_quads=static,
+        )

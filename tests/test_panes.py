@@ -120,14 +120,14 @@ def test_window_tagging_gapped_geometry_matches_range_join(spark, quads):
     sequence — spurious assignments.)"""
     from janus_spark.operators.historical import (
         assign_sliding_windows,
-        assign_sliding_windows_regular,
         sliding_window_bounds,
+        tag_window_ids,
     )
 
     now, offset, rng, step = 20_000, 9_700, 800, 2_000  # gapped + ragged tail
     bounds = sliding_window_bounds(now, offset, rng, step)
     by_join = assign_sliding_windows(quads, bounds)
-    by_math = assign_sliding_windows_regular(quads, now, offset, rng, step)
+    by_math = tag_window_ids(quads, F.col("ts"), now, offset, rng, step)
     cols = ["ts", "subject", "predicate", "object", "graph", "__window_id"]
     a = sorted(map(tuple, by_join.select(*cols).collect()))
     # the range-join tags with window bounds columns; ids beyond k_max
@@ -179,3 +179,18 @@ def test_pane_path_aliased_group_key(spark, quads):
     assert "sensor" in fast.columns
     assert sorted(fast.columns) == sorted(slow.columns)
     assert _collect(fast) == _collect(slow)
+
+
+@pytest.mark.parametrize("use_panes", [True, False])
+def test_empty_hop_gets_implicit_group_row(spark, quads, use_panes):
+    """An aggregate without GROUP BY has one solution per hop even when
+    the hop holds no events (the reference evaluates every hop)."""
+    q = parse_sparql(
+        f"SELECT (COUNT(?t) AS ?n) (SUM(?t) AS ?sum_t) WHERE {{ ?s <{EX}temperature> ?t . }}"
+    )
+    # hops past the fixture's last event (ts 20000) are empty
+    got = run_historical_sliding(q, quads, 24_000, 6_000, 1_000, 1_000, use_panes=use_panes)
+    rows = {r["window_start"]: (r["n"], r["sum_t"]) for r in got.collect()}
+    assert sorted(rows) == list(range(18_000, 24_001, 1_000))
+    assert [rows[s][0] for s in sorted(rows)] == [11, 11, 1, 0, 0, 0, 0]
+    assert all((s_t is None) == (n == 0) for n, s_t in rows.values())

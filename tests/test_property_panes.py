@@ -20,9 +20,9 @@ from pyspark.sql import functions as F
 from janus_spark.compiler import parse_sparql
 from janus_spark.operators.historical import (
     assign_sliding_windows,
-    assign_sliding_windows_regular,
     run_historical_sliding,
     sliding_window_bounds,
+    tag_window_ids,
 )
 
 EX = "http://example.org/"
@@ -55,7 +55,7 @@ def test_arithmetic_tagger_equals_range_join(spark, geom, ts):
             .select("ts", "subject", "__window_id").collect())
     )
     b = sorted(
-        map(tuple, assign_sliding_windows_regular(quads, now, off, rng, step)
+        map(tuple, tag_window_ids(quads, F.col("ts"), now, off, rng, step)
             .select("ts", "subject", "__window_id").collect())
     )
     assert a == b

@@ -526,3 +526,172 @@ def test_parquet_sink_manifest_and_full_rows(spark, tmp_path):
     m0 = sink.manifests[0]
     got = {r["t"] for r in spark.read.parquet(m0["path"]).collect()}
     assert got == {str(i) for i in range(1, 20)} and m0["n_rows"] == 19
+
+
+# ------------------------------------------- live semantics, pinned per window
+def _temps(spark, rows):
+    """(ts, subject, temperature) triples as a quad batch."""
+    return spark.createDataFrame(
+        [(ts, s, f"{EX}temperature", t, "g") for ts, s, t in rows],
+        "ts long, subject string, predicate string, object string, graph string",
+    )
+
+
+def test_implicit_group_count_emits_zero_for_empty_window(spark, tmp_path):
+    """An aggregate without GROUP BY has one solution even over an empty
+    window (SPARQL's implicit group): every fired window emits one row."""
+    text = f"""
+    PREFIX ex: <{EX}>
+    REGISTER RStream <out> AS
+    SELECT (COUNT(?t) AS ?n)
+    FROM NAMED WINDOW ex:w ON STREAM ex:sensors [RANGE 1000 STEP 1000]
+    WHERE {{ WINDOW ex:w {{ ?s ex:temperature ?t . }} }}
+    """
+    batch = _temps(spark, [(i * 100, f"{EX}s{i}", str(i)) for i in range(1, 10)] + [(3500, f"{EX}s0", "1")])
+    runner, sink = make_runner(spark, tmp_path, text)
+    runner.on_batch(batch)
+    got = [(b["window_end"], [r["n"] for r in b["rows"]]) for b in sink.batches]
+    assert got == [(1000, [9]), (2000, [0]), (3000, [0])]
+
+
+def test_order_by_limit_is_per_window(spark, tmp_path):
+    """ORDER BY DESC(?t) LIMIT 2 returns each fired window's top 2, in order."""
+    text = f"""
+    PREFIX ex: <{EX}>
+    REGISTER RStream <out> AS
+    SELECT ?s ?t
+    FROM NAMED WINDOW ex:w ON STREAM ex:sensors [RANGE 2000 STEP 1000]
+    WHERE {{ WINDOW ex:w {{ ?s ex:temperature ?t . }} }}
+    ORDER BY DESC(?t) LIMIT 2
+    """
+    # temperatures fall with time, so each window's top 2 are its earliest
+    events = [(i * 100, f"{EX}s{i}", str(90 - i)) for i in range(1, 50)]
+    runner, sink = make_runner(spark, tmp_path, text)
+    runner.on_batch(_temps(spark, events))
+    assert [b["window_end"] for b in sink.batches] == [2000, 3000, 4000]
+    for b in sink.batches:
+        inside = sorted(
+            (t for ts, _, t in events if b["window_start"] <= ts < b["window_end"]), reverse=True
+        )
+        assert [r["t"] for r in b["rows"]] == inside[:2]
+
+
+@pytest.mark.parametrize("order_by", ["ORDER BY ?t", ""])
+def test_collect_limit_is_per_window(spark, tmp_path, monkeypatch, order_by):
+    """COLLECT_LIMIT caps each fired window on its own: a window whose
+    keys sort after another window's still emits its first rows."""
+    from janus_spark.streaming import live
+
+    monkeypatch.setattr(live, "COLLECT_LIMIT", 2)
+    text = f"""
+    PREFIX ex: <{EX}>
+    REGISTER RStream <out> AS
+    SELECT ?s ?t
+    FROM NAMED WINDOW ex:w ON STREAM ex:sensors [RANGE 1000 STEP 1000]
+    WHERE {{ WINDOW ex:w {{ ?s ex:temperature ?t . }} }}
+    {order_by}
+    """
+    # the first window's temperatures all sort after the second's
+    events = [(100 + i, f"{EX}a{i}", f"9{i}") for i in range(4)]
+    events += [(1100 + i, f"{EX}b{i}", f"1{i}") for i in range(4)]
+    runner, sink = make_runner(spark, tmp_path, text)
+    runner.on_batch(_temps(spark, events + [(2000, f"{EX}c", "50")]))
+    assert [b["window_end"] for b in sink.batches] == [1000, 2000]
+    for b in sink.batches:
+        inside = sorted(t for ts, _, t in events if b["window_start"] <= ts < b["window_end"])
+        got = [r["t"] for r in b["rows"]]
+        assert len(got) == 2 and set(got) <= set(inside)
+        if order_by:
+            assert got == inside[:2]
+
+
+def test_windows_ending_together_emit_identical_rows(spark, tmp_path):
+    """Two live windows with different STEPs that fire at the same end see
+    the same merged content (W4), so they emit identical rows."""
+    text = f"""
+    PREFIX ex: <{EX}>
+    REGISTER RStream <out> AS
+    SELECT ?s ?t
+    FROM NAMED WINDOW ex:a ON STREAM ex:sensors [RANGE 2000 STEP 1000]
+    FROM NAMED WINDOW ex:b ON STREAM ex:sensors [RANGE 3000 STEP 2000]
+    WHERE {{ WINDOW ex:a {{ ?s ex:temperature ?t . }} WINDOW ex:b {{ ?s ex:temperature ?t . }} }}
+    """
+    runner, sink = make_runner(spark, tmp_path, text)
+    runner.on_batch(_unique_subject_quads(spark, 60))
+    by_end: dict = {}
+    for b in sink.batches:
+        by_end.setdefault(b["window_end"], {})[b["window"]] = sorted(map(tuple, b["rows"]))
+    shared = {e: w for e, w in by_end.items() if len(w) == 2}
+    assert sorted(shared) == [3000, 5000]
+    for w in shared.values():
+        a, b = w.values()
+        assert a and a == b
+
+
+def test_static_triple_joins_every_window_of_a_batch(spark, tmp_path):
+    """A static (baseline) triple is visible to every window fired by one
+    micro-batch, not only the first."""
+    text = f"""
+    PREFIX ex: <{EX}>
+    REGISTER RStream <out> AS
+    SELECT ?sensor ?temp ?mean
+    FROM NAMED WINDOW ex:w ON STREAM ex:sensors [RANGE 1000 STEP 1000]
+    WHERE {{
+      WINDOW ex:w {{ ?sensor ex:temperature ?temp . }}
+      ?sensor <https://janus.rs/baseline#mean> ?mean .
+    }}
+    """
+    static = spark.createDataFrame(
+        [(0, f"{EX}sensor1", "https://janus.rs/baseline#mean", "23.5", "")],
+        ["ts", "subject", "predicate", "object", "graph"],
+    )
+    runner, sink = make_runner(spark, tmp_path, text, static)
+    runner.on_batch(melt_sensor_fixture(spark, 50))  # ts 100..5000
+    assert [b["window_end"] for b in sink.batches] == [1000, 2000, 3000, 4000, 5000]
+    for b in sink.batches:
+        assert b["rows"] and all(r["mean"] == "23.5" for r in b["rows"])
+
+
+def _jobs_started(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"live-jobs-{id(fn)}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_jobs_per_batch_independent_of_windows_fired(spark, tmp_path):
+    """A micro-batch that closes 11 windows starts as many Spark jobs as
+    one that closes a single window: all fires share one plan."""
+    text = LIVE_QUERY.replace("RANGE 2000 STEP 1000", "RANGE 1000 STEP 100")
+    fill = _temps(spark, [(i * 50, f"{EX}s{i % 3}", str(i)) for i in range(1, 20)])  # ts < 1000
+    counts, fired = [], []
+    for closer_ts in (1000, 2000):
+        runner, sink = make_runner(spark, tmp_path / str(closer_ts), text)
+        runner.on_batch(fill)
+        assert sink.batches == []
+        closer = _temps(spark, [(closer_ts, f"{EX}s0", "1")])
+        counts.append(_jobs_started(spark, lambda: runner.on_batch(closer)))
+        fired.append(len(sink.batches))
+    assert fired == [1, 11]
+    assert counts[0] == counts[1]
+
+
+def test_parquet_sink_empty_window_manifest(spark, tmp_path):
+    """One write per micro-batch still yields one manifest per fired
+    window; a window without rows has n_rows 0 and a readable, empty
+    parquet directory with the result's columns."""
+    from janus_spark.streaming import ParquetSink
+
+    text = LIVE_QUERY.replace("STEP 1000", "STEP 2000")
+    sink = ParquetSink(str(tmp_path / "out"))
+    runner = LiveQueryRunner(spark, parse_janusql(text), str(tmp_path / "buf"), sink=sink)
+    runner.on_batch(_temps(spark, [(100, f"{EX}s1", "1"), (1500, f"{EX}s2", "2"), (6100, f"{EX}s3", "3")]))
+    assert [(m["window_end"], m["n_rows"]) for m in sink.manifests] == [(2000, 2), (4000, 0), (6000, 0)]
+    full, *empty = [spark.read.parquet(m["path"]) for m in sink.manifests]
+    assert {r["temp"] for r in full.collect()} == {"1", "2"}
+    for df in empty:
+        assert df.schema == full.schema and df.count() == 0
